@@ -46,12 +46,12 @@ def crop_plan(
     ep = F.explode(F.sequence(F.lit(0), F.lit(n_epochs - 1))).alias("epoch")
     base = images.select(F.col(id_col), F.col(w_col), F.col(h_col), ep)
     key = F.concat(F.col(id_col), F.lit(":"), F.col("epoch").cast("string"))
-    crop_w = F.floor(
-        (F.col(w_col) * (min_frac_pct + _hex_slice(key, 0) % span)) / 100
-    ).cast("long")
-    crop_h = F.floor(
-        (F.col(h_col) * (min_frac_pct + _hex_slice(key, 1) % span)) / 100
-    ).cast("long")
+    crop_w = F.call_function(
+        "div", F.col(w_col) * (min_frac_pct + _hex_slice(key, 0) % span), F.lit(100)
+    )
+    crop_h = F.call_function(
+        "div", F.col(h_col) * (min_frac_pct + _hex_slice(key, 1) % span), F.lit(100)
+    )
     with_dims = base.select(
         id_col,
         "epoch",

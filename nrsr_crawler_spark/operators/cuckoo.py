@@ -75,17 +75,6 @@ def _alt_bucket(bucket: np.ndarray, fp: np.ndarray, n_buckets: int) -> np.ndarra
     ).astype(np.int64)
 
 
-def buckets_for(n_keys: int, slots: int = 4, load: float = 0.84) -> int:
-    """Smallest power-of-two bucket count that keeps the table at or below
-    the given load factor (0.84 is the published safe load for 4-slot
-    buckets; beyond it eviction chains blow up)."""
-    n = max(n_keys, 1)
-    b = 1
-    while b * slots * load < n:
-        b <<= 1
-    return b
-
-
 def _insert_batch(
     table: np.ndarray,  # (n_buckets, slots) uint16, mutated
     stash: list,
@@ -108,8 +97,8 @@ def _insert_batch(
         # semantics, Fan et al. §3.3): two distinct url_hashes may collide
         # to the same (fp, bucket) pair, and each must hold its own copy or
         # deleting one key would false-negative the other.  The contract is
-        # that each KEY is inserted at most once — which the epoch loop
-        # guarantees by inserting only post-anti-join new keys.
+        # that each KEY is inserted at most once — build_cuckoo_segments
+        # inserts each distinct key of the seen table once.
         placed = False
         for i in (i1, i2):
             row = table[i]
@@ -141,8 +130,8 @@ def _insert_batch(
                 break
         if cur_fp:
             # table effectively full for this chain — exact-probed stash
-            # keeps correctness; callers should resize (buckets_for) when
-            # stash grows
+            # keeps correctness; callers should build with more buckets
+            # when the stash grows
             stash.append(_stash_key(cur_fp, cur_i))
     return state
 
@@ -171,15 +160,7 @@ def _probe_arrays(
     return hit
 
 
-def _seg_state(seg: pd.DataFrame, n_buckets: int, slots: int):
-    if seg.empty:
-        return (
-            np.zeros((n_buckets, slots), dtype=np.uint16),
-            [],
-            n_buckets,
-            slots,
-            0,
-        )
+def _seg_state(seg: pd.DataFrame):
     nb = int(seg["n_buckets"].iloc[0])
     sl = int(seg["slots"].iloc[0])
     table = (
@@ -230,51 +211,21 @@ def build_cuckoo_segments(
     return with_seg.groupBy("segment_id").applyInPandas(_build, schema=CUCKOO_SCHEMA)
 
 
-def merge_cuckoo_segments(
-    segments: DataFrame,
-    new_hashes: DataFrame,
-    n_segments: int = 16,
-    n_buckets: int = 1 << 12,
-    slots: int = 4,
-) -> DataFrame:
-    """Incrementally insert a delta of ``url_hash`` keys — O(delta) per
-    epoch like the Bloom OR-merge, but structurally: the table mutates in
-    place, existing entries never move unless evicted by the new keys."""
-
-    def _merge(key, seg: pd.DataFrame, delta: pd.DataFrame) -> pd.DataFrame:
-        seg_id = int(key[0])
-        table, stash, nb, sl, n_keys = _seg_state(seg, n_buckets, slots)
-        if not delta.empty:
-            h = np.sort(delta["url_hash"].to_numpy())
-            _insert_batch(table, stash, h, nb, rng_state=seg_id + n_keys + 1)
-            n_keys += len(h)
-        return _seg_row(seg_id, table, stash, n_keys)
-
-    delta_seg = new_hashes.select("url_hash").withColumn(
-        "segment_id", segment_id(F.col("url_hash"), n_segments)
-    )
-    return (
-        segments.groupBy("segment_id")
-        .cogroup(delta_seg.groupBy("segment_id"))
-        .applyInPandas(_merge, schema=CUCKOO_SCHEMA)
-    )
-
-
 def delete_cuckoo(
     segments: DataFrame, del_hashes: DataFrame, n_segments: int = 16
 ) -> DataFrame:
     """Remove one stored copy of each key's fingerprint — the operation a
     Bloom bitset cannot do.  Standard cuckoo-filter caveat applies: only
     delete keys that were actually inserted, else a colliding key's copy is
-    removed (documented in Fan et al. §3.3; the epoch loop only ever
-    deletes keys read back from the exact seen table, which satisfies it).
+    removed (documented in Fan et al. §3.3; deleting keys read back from
+    the exact seen table satisfies it).
     """
 
     def _del(key, seg: pd.DataFrame, dels: pd.DataFrame) -> pd.DataFrame:
         seg_id = int(key[0])
         if seg.empty:
             return _seg_row(seg_id, np.zeros((1, 4), dtype=np.uint16), [], 0)
-        table, stash, nb, sl, n_keys = _seg_state(seg, 0, 0)
+        table, stash, nb, sl, n_keys = _seg_state(seg)
         if not dels.empty:
             h = dels["url_hash"].to_numpy()
             fps = _fingerprints(h)
@@ -324,7 +275,7 @@ def cuckoo_flag(
             cand = cand.copy()
             cand["maybe_seen"] = False
             return cand
-        table, stash, nb, sl, _ = _seg_state(seg, 0, 0)
+        table, stash, nb, sl, _ = _seg_state(seg)
         cand = cand.copy()
         cand["maybe_seen"] = _probe_arrays(
             table, np.asarray(stash, dtype=np.int64), cand["url_hash"].to_numpy(), nb
@@ -353,67 +304,14 @@ def dedup_with_cuckoo(
     seen: DataFrame,
     segments: DataFrame,
     n_segments: int = 16,
-    broadcast_tables: bool = False,
-    bc=None,
 ) -> DataFrame:
     """J4 end-to-end under the cuckoo regime: result equals the plain
     anti-join (cuckoo filters have no false negatives; stash covers
     overfull chains), with only maybe-positive rows entering the exact
-    check — the same asymmetry and the same two physical regimes as
-    seen.dedup_with_bloom (broadcast tables + single compound anti-join /
-    cogrouped partitioned probe)."""
-    if broadcast_tables or bc is not None:
-        flagged = cuckoo_flag_broadcast(candidates, segments, n_segments, bc=bc)
-        s = F.broadcast(seen.select(F.col("url_hash").alias("__seen_hash")))
-        return flagged.join(
-            s,
-            (F.col("url_hash") == F.col("__seen_hash")) & F.col("maybe_seen"),
-            "left_anti",
-        ).drop("maybe_seen")
+    check — the same asymmetry as seen.dedup_with_bloom's partitioned
+    regime (cogrouped probe, one table per task)."""
     flagged = cuckoo_flag(candidates, segments, n_segments)
     definite_new = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybes = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     confirmed_new = maybes.join(seen.select("url_hash"), "url_hash", "left_anti")
     return definite_new.unionByName(confirmed_new)
-
-
-def collect_cuckoo_segments(spark, segments: DataFrame):
-    """Materialize + broadcast {segment_id: (table, stash)} once — the
-    cuckoo counterpart of seen.collect_segments for the broadcast regime."""
-    segs = {}
-    for r in segments.collect():
-        nb, sl = int(r["n_buckets"]), int(r["slots"])
-        table = np.frombuffer(r["table"], dtype=np.uint16).reshape(nb, sl)
-        stash = np.asarray(list(r["stash"] or []), dtype=np.int64)
-        segs[int(r["segment_id"])] = (table, stash)
-    return spark.sparkContext.broadcast(segs)
-
-
-def cuckoo_flag_broadcast(
-    candidates: DataFrame, segments: DataFrame | None, n_segments: int = 16, bc=None
-) -> DataFrame:
-    """Broadcast-regime probe: every executor holds all fingerprint tables;
-    only the hash column crosses the Arrow boundary (mirrors
-    seen.bloom_flag_broadcast)."""
-    from pyspark.sql.functions import pandas_udf
-
-    spark = candidates.sparkSession
-    if bc is None:
-        bc = collect_cuckoo_segments(spark, segments)
-
-    @pandas_udf("boolean")
-    def probe(url_hash: pd.Series) -> pd.Series:
-        table_map = bc.value
-        h = url_hash.to_numpy()
-        out = np.zeros(len(h), dtype=bool)
-        seg_ids = (h % np.int64(n_segments) + n_segments) % np.int64(n_segments)
-        for seg in np.unique(seg_ids):
-            entry = table_map.get(int(seg))
-            if entry is None:
-                continue
-            table, stash = entry
-            mask = seg_ids == seg
-            out[mask] = _probe_arrays(table, stash, h[mask], table.shape[0])
-        return pd.Series(out)
-
-    return candidates.withColumn("maybe_seen", probe(F.col("url_hash")))

@@ -34,7 +34,12 @@ def scheduling_fairness(
     return per_host.agg(
         F.count(F.lit(1)).cast("long").alias("n_hosts"),
         F.sum("x").cast("long").alias("n_scheduled"),
-        F.expr("(sum(x) * sum(x) * 10000) div (count(1) * sum(x * x))")
+        # (Σx)²·10⁴ passes 2⁶³ once Σx > ~3.0e7, so the ratio is formed
+        # in DECIMAL(38,0) (exact to ~1e38, e.g. Σx = 10¹⁰ over 10⁵ hosts)
+        F.expr(
+            "(cast(sum(x) as decimal(38,0)) * sum(x) * 10000)"
+            " div (count(1) * sum(cast(x as decimal(38,0)) * x))"
+        )
         .cast("long")
         .alias("jain_bps"),
         F.expr("(max(x) * 10000) div sum(x)").cast("long").alias("max_share_bps"),

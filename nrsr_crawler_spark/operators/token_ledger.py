@@ -51,13 +51,13 @@ def token_ledger(
     id_col: str = "doc_id",
     text_col: str = "text",
     lang_col: str = "lang",
-    source_col: str = "source",
     eval_mod: int = 20,
     n_gram: int = 8,
     n_total: int = 200,
     seq_len: int = 512,
 ) -> DataFrame:
-    """Per-stage (docs, tokens) funnel ledger — see module docstring."""
+    """Per-stage (docs, tokens) funnel ledger — see module docstring.
+    ``docs`` must carry a ``source`` column: packing groups by it."""
     from nrsr_crawler_spark.operators.decontaminate import decontaminate
     from nrsr_crawler_spark.operators.packing import packing_stats, seq_packing
     from nrsr_crawler_spark.operators.sampling import temperature_mixture_sample
@@ -66,7 +66,7 @@ def token_ledger(
     base = docs.select(
         F.col(id_col),
         F.col(lang_col),
-        F.col(source_col),
+        F.col("source"),
         F.col(text_col),
         token_count(F.col(text_col)).cast("long").alias("n_tokens"),
     ).persist()
@@ -106,7 +106,7 @@ def token_ledger(
 
     # 5. packing — per-source streams, fixed seq_len windows
     man = seq_packing(
-        s4.select(id_col, source_col, text_col), seq_len, id_col, text_col, source_col
+        s4.select(id_col, "source", text_col), seq_len, id_col, text_col
     )
     pack = packing_stats(man, seq_len).agg(
         F.coalesce(F.sum("n_seqs"), F.lit(0)).cast("long").alias("n_seqs"),

@@ -18,10 +18,10 @@ epoch and converges to identical table contents (north_rule resume).
 
 ``seq`` packing bound (hard invariant, guarded): at most 2^parent_bits
 popped parents per epoch and 2^child_bits links per page.  Beyond that the
-packed lineage would alias; with ``strict_seq`` (default) the engine raises
-loudly instead of silently degrading.  Pop order itself stays deterministic
-regardless (canon_url tiebreak), but reference-order certification assumes
-the bound.  Widen the bits via constructor args for pathological sites.
+packed lineage would alias, so the engine raises loudly instead of silently
+degrading.  Pop order itself stays deterministic regardless (canon_url
+tiebreak), but reference-order certification assumes the bound.  Widen
+the bits via constructor args for pathological sites.
 
 Ordering equivalence with the reference (north_rule): with
 ``budget_per_host=1`` on a single-host site the pop order IS the reference's
@@ -39,7 +39,7 @@ never O(crawl history):
     all historical deltas (that was O(history)·epochs);
   - the SEEN set for the exact dedup check is maintained as an in-memory
     union of per-epoch deltas, collapsed by ``localCheckpoint`` every
-    ``seen_collapse_every`` epochs — no parquet re-read per epoch;
+    ``_SEEN_COLLAPSE_EVERY`` epochs — no parquet re-read per epoch;
   - pop is the two-level salted window (operators/politeness.py) — immune to
     single-host skew;
   - the seen anti-join probe is bloom-pruned (operators/seen.py); in the
@@ -51,9 +51,10 @@ never O(crawl history):
     bitsets distributively (O(delta) hashing) with the merged frame
     localCheckpoint-ed so old segments can be unpersisted safely;
   - bitsets are SIZED from the observed seen count (seen.bits_for) with a
-    geometric growth factor, and fully rebuilt when the key count outgrows
-    the sized capacity — the false-positive rate stays at the design target
-    instead of saturating (amortized O(n) over the crawl);
+    geometric growth factor (``_BLOOM_GROWTH``), and fully rebuilt when the
+    key count outgrows the sized capacity — the false-positive rate stays
+    at the design target instead of saturating (amortized O(n) over the
+    crawl);
   - per-epoch row counts ride on ``Observation`` metrics attached to the
     delta writes — no extra read-back count jobs;
   - at deploy scale the deltas are Iceberg appends with periodic compaction;
@@ -74,7 +75,6 @@ from nrsr_crawler_spark.lake.table import EpochLake
 from nrsr_crawler_spark.operators import frontier as frontier_ops
 from nrsr_crawler_spark.operators import parse as parse_ops
 from nrsr_crawler_spark.operators import parse_typed as PT
-from nrsr_crawler_spark.operators import cuckoo as cuckoo_ops
 from nrsr_crawler_spark.operators import politeness, robots, seen as seen_ops
 from nrsr_crawler_spark.operators import retry as retry_ops
 from nrsr_crawler_spark.operators import traps
@@ -93,6 +93,10 @@ EXPIRED_SCHEMA = "url_hash long, mode string, epoch int"
 EDGES_SCHEMA = "parent_hash long, parent_seq long, child_idx int, url string, canon_url string, url_hash long"
 
 _SEQ_EPOCH_SHIFT = 40
+# the in-memory seen union is collapsed (localCheckpoint) every this many
+# epochs; Bloom bitsets are sized for this many times the current key count
+_SEEN_COLLAPSE_EVERY = 16
+_BLOOM_GROWTH = 8
 
 
 @dataclass
@@ -117,13 +121,9 @@ class CrawlEngine:
         num_salts: int = 16,
         n_segments: int = 16,
         use_bloom: bool = True,
-        filter_kind: str = "bloom",
         base_url: str = "https://www.nrsr.sk/web/",
         bloom_fp: float = 1e-4,
-        bloom_growth: int = 8,
         broadcast_max_keys: int = 5_000_000,
-        seen_collapse_every: int = 16,
-        strict_seq: bool = True,
         seq_parent_bits: int = 20,
         seq_child_bits: int = 20,
         typed_items: bool = True,
@@ -145,15 +145,9 @@ class CrawlEngine:
         self.num_salts = num_salts
         self.n_segments = n_segments
         self.use_bloom = use_bloom
-        if filter_kind not in ("bloom", "cuckoo"):
-            raise ValueError(f"filter_kind must be 'bloom' or 'cuckoo', got {filter_kind!r}")
-        self.filter_kind = filter_kind
         self.base_url = base_url
         self.bloom_fp = bloom_fp
-        self.bloom_growth = bloom_growth
         self.broadcast_max_keys = broadcast_max_keys
-        self.seen_collapse_every = seen_collapse_every
-        self.strict_seq = strict_seq
         self.seq_parent_bits = seq_parent_bits
         self.seq_child_bits = seq_child_bits
         self.typed_items = typed_items
@@ -250,7 +244,7 @@ class CrawlEngine:
         their children's seq values and silently break the "lineage seq never
         aliases" invariant off the single-host path.  Using the dense global
         ordinal keeps the guard exact: the packed space overflows iff
-        n_popped > 2^parent_bits, which strict_seq checks directly.  In-batch
+        n_popped > 2^parent_bits, which run() checks directly.  In-batch
         "min seq wins" prefers the child of the earliest parent in the
         deterministic (host, rk) serialization — identical to pop order on a
         single host, a valid serialization of the parallel pops otherwise."""
@@ -317,11 +311,10 @@ class CrawlEngine:
         ``urls`` needs a ``url_hash`` column, or a ``url`` column which is
         canonicalized + fingerprinted here.  Tombstones are appended to an
         ``expired`` lake table (Iceberg delete-file shaped) and applied as
-        O(|tombstones|) anti-joins at run() start.  On a long-lived driver
-        the cuckoo regime (filter_kind="cuckoo") additionally supports
-        applying "forget" to the LIVE filter via cuckoo.delete_cuckoo with
-        no rebuild — Bloom bitsets cannot delete and must rebuild, which is
-        the reason the deletion-capable regime exists.
+        O(|tombstones|) anti-joins at run() start.  Expiry takes effect at
+        the next run(): it rebuilds the seen set and its Bloom filter from
+        the frontier left after the "forget" anti-join, so no filter ever
+        needs a key deleted.
         """
         if mode not in ("refetch", "forget"):
             raise ValueError(f"mode must be 'refetch' or 'forget', got {mode!r}")
@@ -593,7 +586,7 @@ class CrawlEngine:
         """(per-segment m_bits, k, capacity_keys) sized for ``n_keys`` keys
         with geometric headroom — the filter holds its design FP rate until
         the seen set outgrows ``capacity_keys`` and triggers a rebuild."""
-        capacity = max(n_keys, 1024) * self.bloom_growth
+        capacity = max(n_keys, 1024) * _BLOOM_GROWTH
         per_seg = max(capacity // self.n_segments, 64)
         m_bits, k = seen_ops.bits_for(per_seg, self.bloom_fp)
         # byte-align so tobytes()/frombuffer round-trips exactly
@@ -651,7 +644,7 @@ class CrawlEngine:
             for seg in np.unique(seg_ids):
                 entry = self._seg_arrays.get(int(seg))
                 if entry is None:
-                    m_bits, k, _ = self._bloom_params(self._bloom_capacity // self.bloom_growth)
+                    m_bits, k, _ = self._bloom_params(self._bloom_capacity // _BLOOM_GROWTH)
                     entry = (np.zeros(m_bits // 8, dtype=np.uint8), m_bits, k)
                     self._seg_arrays[int(seg)] = entry
                 bits, m, k = entry
@@ -665,96 +658,6 @@ class CrawlEngine:
             merged = seen_ops.merge_segments(
                 self._segments, new_hashes, self.n_segments
             ).localCheckpoint()  # materialize BEFORE dropping the old state
-            self._segments.unpersist()
-            self._segments = merged
-
-    # -- cuckoo state (filter_kind="cuckoo": same lifecycle as the Bloom
-    # regimes, with fingerprint tables instead of bitsets; deletion-capable
-    # via cuckoo_ops.delete_cuckoo for recrawl/TTL deployments) -------------
-    def _cuckoo_params(self, n_keys: int) -> tuple[int, int]:
-        capacity = max(n_keys, 1024) * self.bloom_growth
-        per_seg = max(capacity // self.n_segments, 64)
-        return cuckoo_ops.buckets_for(per_seg), capacity
-
-    def _build_cuckoo(self, seen: DataFrame, n_keys: int) -> None:
-        import numpy as np
-
-        n_buckets, capacity = self._cuckoo_params(n_keys)
-        self._bloom_capacity = capacity  # shared capacity gate with bloom path
-        self._ck_nbuckets = n_buckets
-        segs = cuckoo_ops.build_cuckoo_segments(seen, self.n_segments, n_buckets=n_buckets)
-        self._use_bcast = n_keys <= self.broadcast_max_keys
-        if self._use_bcast:
-            if self._seg_bc is not None:
-                self._seg_bc.destroy()
-            self._ck_state = {}
-            for r in segs.collect():
-                nb, sl = int(r["n_buckets"]), int(r["slots"])
-                self._ck_state[int(r["segment_id"])] = [
-                    np.frombuffer(r["table"], dtype=np.uint16).reshape(nb, sl).copy(),
-                    [int(x) for x in (r["stash"] or [])],
-                    int(r["n_keys"]),
-                ]
-            self._seg_bc = self._broadcast_ck()
-            if self._segments is not None:
-                self._segments.unpersist()
-                self._segments = None
-        else:
-            old = self._segments
-            self._segments = segs.localCheckpoint()
-            if old is not None:
-                old.unpersist()
-            if self._seg_bc is not None:
-                self._seg_bc.destroy()
-                self._seg_bc = None
-                self._ck_state = None
-
-    def _broadcast_ck(self):
-        import numpy as np
-
-        return self.spark.sparkContext.broadcast(
-            {
-                s: (t, np.asarray(st, dtype=np.int64))
-                for s, (t, st, _) in self._ck_state.items()
-            }
-        )
-
-    def _merge_cuckoo(self, new_hashes: DataFrame, seen: DataFrame, seen_count: int) -> None:
-        if seen_count > self._bloom_capacity or (
-            self._use_bcast and seen_count > self.broadcast_max_keys
-        ):
-            self._build_cuckoo(seen, seen_count)
-            return
-        if self._use_bcast:
-            import numpy as np
-
-            hs = np.array(
-                [r[0] for r in new_hashes.select("url_hash").collect()], dtype=np.int64
-            )
-            seg_ids = (hs % np.int64(self.n_segments) + self.n_segments) % np.int64(
-                self.n_segments
-            )
-            for seg in np.unique(seg_ids):
-                entry = self._ck_state.get(int(seg))
-                if entry is None:
-                    entry = [
-                        np.zeros((self._ck_nbuckets, 4), dtype=np.uint16),
-                        [],
-                        0,
-                    ]
-                    self._ck_state[int(seg)] = entry
-                table, stash, n_keys = entry
-                seg_hs = np.sort(hs[seg_ids == seg])
-                cuckoo_ops._insert_batch(
-                    table, stash, seg_hs, table.shape[0], rng_state=int(seg) + n_keys + 1
-                )
-                entry[2] = n_keys + len(seg_hs)
-            self._seg_bc.destroy()
-            self._seg_bc = self._broadcast_ck()
-        else:
-            merged = cuckoo_ops.merge_cuckoo_segments(
-                self._segments, new_hashes, self.n_segments, n_buckets=self._ck_nbuckets
-            ).localCheckpoint()
             self._segments.unpersist()
             self._segments = merged
 
@@ -837,14 +740,9 @@ class CrawlEngine:
         self._segments = None
         self._seg_bc = None
         self._seg_arrays = None
-        self._ck_state = None
-        self._ck_nbuckets = 0
         self._use_bcast = True
         if self.use_bloom:
-            if self.filter_kind == "cuckoo":
-                self._build_cuckoo(seen, seen_count)
-            else:
-                self._build_bloom(seen, seen_count)
+            self._build_bloom(seen, seen_count)
         epochs_since_collapse = 0
 
         # trap guard: running (tpl_hash, n) counts — one bounded aggregate
@@ -1072,16 +970,10 @@ class CrawlEngine:
             cand = frontier_ops.prepare_in_batch(cand)
             # cross-epoch dedup (J4): bloom-pruned anti-join vs the seen set
             if self.use_bloom:
-                if self.filter_kind == "cuckoo":
-                    new = cuckoo_ops.dedup_with_cuckoo(
-                        cand, seen, self._segments, self.n_segments,
-                        broadcast_tables=self._use_bcast, bc=self._seg_bc,
-                    )
-                else:
-                    new = seen_ops.dedup_with_bloom(
-                        cand, seen, self._segments, self.n_segments,
-                        broadcast_bits=self._use_bcast, bc=self._seg_bc,
-                    )
+                new = seen_ops.dedup_with_bloom(
+                    cand, seen, self._segments, self.n_segments,
+                    broadcast_bits=self._use_bcast, bc=self._seg_bc,
+                )
             else:
                 new = cand.join(seen, "url_hash", "left_anti")
             new_delta = self._finish_frontier_cols(new)
@@ -1157,23 +1049,22 @@ class CrawlEngine:
             max_child = obs_edges.get["max_child"]
             n_new = int(obs_frontier.get["n"])
             n_items = int(obs_items.get["n"])
-            if self.strict_seq:
-                # grk is DENSE over the epoch's popped parents, so the packed
-                # parent space overflows exactly when n_popped > 2^bits —
-                # an epoch-wide guard that holds on multi-host crawls too
-                # (per-host max rk could pass while packed ordinals alias).
-                if n_popped > parent_cap:
-                    raise RuntimeError(
-                        f"epoch {epoch}: {n_popped} popped parents exceed the "
-                        f"2^{self.seq_parent_bits} seq-packing bound; raise "
-                        f"seq_parent_bits or lower budget_per_host (lineage "
-                        f"seq would alias)"
-                    )
-                if max_child is not None and int(max_child) >= child_cap:
-                    raise RuntimeError(
-                        f"epoch {epoch}: child_idx {int(max_child)} exceeds the "
-                        f"2^{self.seq_child_bits} seq-packing bound; raise seq_child_bits"
-                    )
+            # grk is DENSE over the epoch's popped parents, so the packed
+            # parent space overflows exactly when n_popped > 2^bits — an
+            # epoch-wide guard that holds on multi-host crawls too (per-host
+            # max rk could pass while packed ordinals alias).
+            if n_popped > parent_cap:
+                raise RuntimeError(
+                    f"epoch {epoch}: {n_popped} popped parents exceed the "
+                    f"2^{self.seq_parent_bits} seq-packing bound; raise "
+                    f"seq_parent_bits or lower budget_per_host (lineage "
+                    f"seq would alias)"
+                )
+            if max_child is not None and int(max_child) >= child_cap:
+                raise RuntimeError(
+                    f"epoch {epoch}: child_idx {int(max_child)} exceeds the "
+                    f"2^{self.seq_child_bits} seq-packing bound; raise seq_child_bits"
+                )
             meta = {"kind": "crawl", "popped": n_popped, "enqueued": n_new, "items": n_items, "edges": n_edges}
             if self._retries_enabled:
                 meta["retried"] = n_retry
@@ -1241,15 +1132,12 @@ class CrawlEngine:
                 seen_count += n_new
                 next_seen = seen.unionByName(new_hashes)
                 epochs_since_collapse += 1
-                if epochs_since_collapse >= self.seen_collapse_every:
+                if epochs_since_collapse >= _SEEN_COLLAPSE_EVERY:
                     next_seen = next_seen.localCheckpoint()
                     epochs_since_collapse = 0
                 seen = next_seen
                 if self.use_bloom:
-                    if self.filter_kind == "cuckoo":
-                        self._merge_cuckoo(new_hashes, seen, seen_count)
-                    else:
-                        self._merge_bloom(new_hashes, seen, seen_count)
+                    self._merge_bloom(new_hashes, seen, seen_count)
             else:
                 next_pending = pending.join(popped_keys, "url_hash", "left_anti")
                 if retry_pend is not None:

@@ -22,6 +22,12 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+# local mode runs every task inside the driver heap, and ParallelGC grows the
+# heap toward -Xmx before collecting: a heap larger than the machine's RAM
+# gets the JVM OOM-killed mid-run instead of collected.  Default to half the
+# physical memory, at most 24g.
+_RAM_GB = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+DEFAULT_DRIVER_GB = max(1, min(24, _RAM_GB // 2))
 
 
 def get_spark(
@@ -61,14 +67,20 @@ def get_spark(
             "spark.sql.files.maxPartitionBytes",
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "8m"),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{DEFAULT_DRIVER_GB}g"),
+        )
         # ParallelGC: measured G1 spending 292 s (!) on its first heavy pass
         # growing the heap (humongous string allocations) vs a flat ~17 s
         # under ParallelGC; batch throughput workloads don't need G1's pause
         # targets.  Applies to executors via the same option on real submits.
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get("SPARK_GRAFT_GC", "-XX:+UseParallelGC -Xms8g"),
+            os.environ.get(
+                "SPARK_GRAFT_GC",
+                f"-XX:+UseParallelGC -Xms{min(8, DEFAULT_DRIVER_GB)}g",
+            ),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -22,12 +22,6 @@ def main() -> None:
     ap.add_argument("--max-epochs", type=int, default=100000)
     ap.add_argument("--num-salts", type=int, default=16)
     ap.add_argument("--segments", type=int, default=32)
-    ap.add_argument(
-        "--filter",
-        choices=["bloom", "cuckoo"],
-        default="bloom",
-        help="seen-set filter regime (cuckoo adds deletion for recrawl/TTL)",
-    )
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -50,7 +44,6 @@ def main() -> None:
         budget_per_host=args.budget,
         num_salts=args.num_salts,
         n_segments=args.segments,
-        filter_kind=args.filter,
     )
     stats = engine.run(seeds=args.seeds or None, max_epochs=args.max_epochs)
     print(

@@ -49,7 +49,7 @@ def test_refetch_pops_again_exactly_once(spark, tmp_path):
 
 
 def test_forget_reenqueues_only_on_rediscovery(spark, tmp_path):
-    engine = _engine(spark, tmp_path, filter_kind="cuckoo")
+    engine = _engine(spark, tmp_path)
     engine.run([SEED_URL])
     # pick a fetched child and its fetched parent from the edge lineage
     edges = engine.lake.read_all(spark, "edges")

@@ -1,7 +1,7 @@
 """Cuckoo seen-set invariants (SURVEY §2.10 pluggable dedup, third regime):
 zero false negatives (including past capacity, via the stash), bounded
-false-positive rate, end-to-end dedup == exact dedup, incremental merge ==
-full rebuild behavior, and the capability Bloom lacks — deletion."""
+false-positive rate, end-to-end dedup == exact dedup, and the capability
+Bloom lacks — deletion."""
 
 from __future__ import annotations
 
@@ -51,23 +51,6 @@ def test_dedup_with_cuckoo_equals_exact(spark):
     got = C.dedup_with_cuckoo(cand, seen, segs, n_segments=8)
     assert got.count() == exact.count()
     assert got.select("url_hash").exceptAll(exact.select("url_hash")).count() == 0
-
-
-def test_incremental_merge_zero_fn(spark):
-    """OR-merge equivalent for cuckoo: fold three deltas into the segments
-    and the union of all keys must probe positive (O(delta) maintenance,
-    same contract as seen.merge_segments)."""
-    segs = C.build_cuckoo_segments(
-        _hashes(spark, 0, 2000), n_segments=8, n_buckets=1 << 9
-    )
-    for lo, hi in ((2000, 3500), (3500, 4200), (4200, 6000)):
-        segs = C.merge_cuckoo_segments(
-            segs, _hashes(spark, lo, hi), n_segments=8, n_buckets=1 << 9
-        )
-        segs = spark.createDataFrame(segs.collect(), schema=C.CUCKOO_SCHEMA)
-    everything = _hashes(spark, 0, 6000)
-    flagged = C.cuckoo_flag(everything, segs, n_segments=8)
-    assert flagged.filter(~F.col("maybe_seen")).count() == 0
 
 
 def test_delete_reopens_urls_and_keeps_others(spark):

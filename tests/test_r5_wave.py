@@ -38,6 +38,17 @@ def test_fairness_single_host_dominates(spark):
     assert r["max_share_bps"] == (96 * 10000) // 99
 
 
+def test_fairness_exact_past_bigint_square(spark):
+    # Σx = 31,000,001 → (Σx)²·10⁴ ≈ 9.6e18 > 2⁶³−1: the Jain numerator no
+    # longer fits a BIGINT; the index must still be the exact integer ratio
+    n = 31_000_001
+    sched = spark.range(n).select(F.concat(F.lit("h"), (F.col("id") % 3).cast("string")).alias("host"))
+    r = scheduling_fairness(sched).collect()[0]
+    xs = [n // 3 + (1 if i < n % 3 else 0) for i in range(3)]
+    assert r["n_scheduled"] == n
+    assert r["jain_bps"] == (n * n * 10000) // (3 * sum(x * x for x in xs))
+
+
 def test_fairness_single_aggregation_no_python(spark):
     sched = spark.createDataFrame([("h1",), ("h2",)], "host string")
     plan = _plan(scheduling_fairness(sched))

@@ -67,6 +67,19 @@ def test_crop_plan_bounds_and_determinism(spark):
     assert len(img1) > 1
 
 
+def test_crop_plan_dims_exact_past_double_precision(spark):
+    # w·pct ≈ 6e17–9e17 is far past 2⁵³, where a double rounds to a multiple
+    # of 128: crop dims must be the exact BIGINT (axis · pct) div 100
+    w, h = 2**53 + 12345, 2**53 + 987
+    imgs = spark.createDataFrame([("big", w, h)], "image_id string, w long, h long")
+    for r in crop_plan(imgs, n_epochs=8).collect():
+        digest = hashlib.md5(f"big:{r['epoch']}".encode()).hexdigest()
+        pct_w = 70 + int(digest[0:4], 16) % 31
+        pct_h = 70 + int(digest[4:8], 16) % 31
+        assert r["crop_w"] == (w * pct_w) // 100
+        assert r["crop_h"] == (h * pct_h) // 100
+
+
 def test_crop_plan_zero_shuffle(spark):
     imgs = spark.createDataFrame([("i", 64, 64)], "image_id string, w long, h long")
     plan = _plan(crop_plan(imgs, n_epochs=2))
