@@ -22,6 +22,7 @@ that scales linearly with executors.
 
 from __future__ import annotations
 
+import re
 from urllib.parse import urlsplit
 
 from pyspark.sql import Column
@@ -30,6 +31,9 @@ from pyspark.sql import functions as F
 DEFAULT_PORTS = {"http": 80, "https": 443}
 
 _SCHEME_RE = r"^[a-z][a-z0-9+.\-]*$"
+# an href's scheme, when it has one (RFC 3986 §3.1): it ends at the first
+# ':' and precedes any '/', '?' or '#'
+HREF_SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.\-]*):"
 
 _TMP_COLS = (
     "__loc", "__len", "__scheme", "__rest", "__qsplit", "__authpath", "__query",
@@ -74,6 +78,13 @@ def with_canon(
     dropped *before* a stateful op, as in streaming — pass ``valid_col`` and
     filter on that boolean: its expression references each intermediate only
     once, so the pushed-down predicate stays linear.
+
+    The same holds for a comparison with the other side of a join: filtering
+    ``hash_col == <joined column>`` above this transform is pushed into the
+    join, and the inlined ``xxhash64(<whole canon>)`` becomes a join key
+    evaluated on every input row.  Join on plain columns before the canon
+    (to shrink its input) or after an aggregation over its output, as
+    ``operators.frontier.rejoin_urls`` does.
     """
     clash = set(df.columns) & set(_TMP_COLS)
     if clash:
@@ -171,6 +182,20 @@ def with_canon(
         "__auth", "__path", "__hostport", "__host", "__port", "__hostout", "__sq",
         "__valid",
     )
+
+
+def is_link_href(href: Column) -> Column:
+    """True when an href names a page to fetch: scheme-less (relative,
+    resolved against the base URL) or http(s).  ``javascript:``, ``mailto:``
+    and other schemes are not links — appended to the base URL they would
+    make fetchable nonsense.  :func:`is_link_href_py` is the Python mirror."""
+    scheme = F.lower(F.regexp_extract(href, HREF_SCHEME_RE, 1))
+    return scheme.isin("", "http", "https")
+
+
+def is_link_href_py(href: str) -> bool:
+    m = re.match(HREF_SCHEME_RE, href)
+    return m is None or m.group(1).lower() in ("http", "https")
 
 
 def canonicalize(url: Column) -> Column:

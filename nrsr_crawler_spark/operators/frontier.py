@@ -67,7 +67,7 @@ def prepare_candidates_slim(
     :func:`prepare_candidates` picks.  Exact duplicate raw rows (same url,
     same seq — real frontiers contain them; even the driver's testdata
     lineitem does) collapse in this groupBy and are re-collapsed by the
-    bounded final agg in :func:`rejoin_urls`, so the pair is duplicate-safe
+    bounded agg in :func:`rejoin_urls`, so the pair is duplicate-safe
     end to end."""
     meta_cols = [c for c in raw.columns if c not in (url_col, seq_col)]
     prepared = U.with_canon(raw, url_col=url_col, hash_col="url_hash").drop(
@@ -95,35 +95,31 @@ def rejoin_urls(
     popped: DataFrame, raw: DataFrame, url_col: str = "url", seq_col: str = "seq"
 ) -> DataFrame:
     """Recover the canonical URL for a budget-bounded popped set: recompute
-    the canon MAP-SIDE over ``raw`` (no exchange) and broadcast-join the
-    popped keys onto it — URL strings never shuffle.
+    the canon MAP-SIDE over the few ``raw`` rows that can match and
+    broadcast-join the popped keys onto them — URL strings never shuffle at
+    frontier scale.
 
-    Shape: ONE broadcast of ``popped``, inner-joined on ``seq`` (a plain
-    long equality, evaluated BELOW the canon projection) so the recompute
-    pass pays regex/canon CPU only on rows that can match — O(budget ·
-    seq-dup-factor), not O(frontier) — then the exact winner is selected by
-    hash equality AFTER the canon.  A final groupBy on (url_hash, seq)
+    Shape: a ``left_semi`` broadcast join keeps the raw rows whose ``seq``
+    is popped (a plain long equality), so the canon runs on O(budget ·
+    seq-dup-factor) rows, not O(frontier).  A groupBy on (url_hash, seq)
     collapses exact duplicate raw rows (same url + same seq occurs in real
-    frontiers) back to ONE output row per popped key; that exchange carries
-    canon_url but is bounded by the POPPED set (≤ budget · hosts rows), so
-    the O(frontier)-scale stages still ship no URL strings — the invariant
-    that matters at 100 TB.  Deterministic: every duplicate has identical
-    canon_url (same hash) and identical carry columns (from the broadcast
-    side), and min() makes the collapse order-free.  Caveat: non-key
-    ``popped`` columns must not collide with ``raw`` column names (they are
-    carried through)."""
+    frontiers); its exchange carries canon_url but is bounded by the popped
+    set.  An inner broadcast join with ``popped`` on the aggregated
+    (url_hash, seq) then keeps the exact winners — two URLs that share a
+    ``seq`` differ in hash, and invalid urls (canon NULL) sit in the
+    xxhash64(NULL) group — and carries the other ``popped`` columns.  Both
+    joins have plain-column keys: a hash comparison above the canon would be
+    pushed into the join and canonicalize every raw row again, inlined (see
+    ``urls.with_canon``).  ``popped`` must not carry a ``canon_url`` column."""
     carry = [c for c in popped.columns if c not in ("url_hash", seq_col)]
-    want = popped.withColumnRenamed("url_hash", "__want_hash")
-    joined = raw.join(F.broadcast(want), seq_col)
-    prepared = U.with_canon(joined, url_col=url_col, hash_col="url_hash")
-    matched = prepared.filter(F.col("url_hash") == F.col("__want_hash"))
-    return (
-        matched.groupBy("url_hash", seq_col)
-        .agg(
-            F.min("canon_url").alias("canon_url"),
-            *[F.min(c).alias(c) for c in carry],
-        )
-        .select("url_hash", seq_col, "canon_url", *carry)
+    hit = raw.join(F.broadcast(popped.select(seq_col)), seq_col, "left_semi")
+    canon = (
+        U.with_canon(hit, url_col=url_col, hash_col="url_hash")
+        .groupBy("url_hash", seq_col)
+        .agg(F.min("canon_url").alias("canon_url"))
+    )
+    return canon.join(F.broadcast(popped), ["url_hash", seq_col]).select(
+        "url_hash", seq_col, "canon_url", *carry
     )
 
 

@@ -99,6 +99,23 @@ _SEEN_COLLAPSE_EVERY = 16
 _BLOOM_GROWTH = 8
 
 
+def _tombstone_keys(urls: DataFrame) -> DataFrame:
+    """Distinct ``url_hash`` of the URLs handed to :meth:`CrawlEngine.expire`;
+    a frame without ``url_hash`` is canonicalized + fingerprinted from its
+    ``url``.  Invalid URLs all hash to xxhash64(NULL) and collapse into one
+    group, dropped after the aggregation: a filter directly above
+    ``with_canon`` would be pushed into its alias chain (see there)."""
+    if "url_hash" in urls.columns:
+        return urls.select("url_hash").distinct()
+    return (
+        U.with_canon(urls, hash_col="url_hash", valid_col="url_ok")
+        .groupBy("url_hash")
+        .agg(F.bool_or("url_ok").alias("url_ok"))
+        .filter(F.col("url_ok"))
+        .select("url_hash")
+    )
+
+
 @dataclass
 class CrawlStats:
     epochs: int
@@ -321,14 +338,9 @@ class CrawlEngine:
         epoch = self.lake.last_committed()
         if epoch < 0:
             raise ValueError("nothing crawled yet — expire() needs a committed lake")
-        if "url_hash" not in urls.columns:
-            urls = (
-                U.with_canon(urls, hash_col="url_hash")
-                .filter(F.col("canon_url").isNotNull())
-            )
         from pathlib import Path
 
-        new = urls.select("url_hash").distinct().withColumn("mode", F.lit(mode))
+        new = _tombstone_keys(urls).withColumn("mode", F.lit(mode))
         n = new.count()
         # A tombstone is SCOPED to its epoch: it clears only state written at
         # epochs <= its own (run() applies it with an epoch-bounded
@@ -942,14 +954,18 @@ class CrawlEngine:
                 child_src = item_src = fresh
 
             # children: resolve reference-style (absolute pass-through, else
-            # BASE_URL concat — members.py:76), canon+hash+robots at schedule time
+            # BASE_URL concat — members.py:76), canon+hash+robots at schedule
+            # time; hrefs with any other scheme (javascript:, mailto:) are
+            # not links and are dropped before resolution
+            href = F.col("href")
             edges = U.with_canon(
-                parse_ops.extract_children(child_src, rank_col="grk").withColumn(
+                parse_ops.extract_children(child_src, rank_col="grk")
+                .filter(U.is_link_href(href))
+                .withColumn(
                     "url",
                     F.when(
-                        F.col("href").startswith("http://") | F.col("href").startswith("https://"),
-                        F.col("href"),
-                    ).otherwise(F.concat(F.lit(self.base_url), F.col("href"))),
+                        href.startswith("http://") | href.startswith("https://"), href
+                    ).otherwise(F.concat(F.lit(self.base_url), href)),
                 ),
                 hash_col="url_hash",
                 valid_col="url_ok",

@@ -71,13 +71,15 @@ def sitemap_candidates(pages: DataFrame, body_col: str = "body") -> DataFrame:
     entries = parse_sitemap(pages, body_col=body_col)
     prepared = U.with_canon(entries, url_col="loc", hash_col="url_hash")
     return (
-        prepared.filter(F.col("canon_url").isNotNull())
-        .groupBy("url_hash")
+        prepared.groupBy("url_hash")
         .agg(
             F.min("canon_url").alias("canon_url"),
             F.min("host").alias("host"),
             F.max("lastmod").alias("lastmod"),
         )
+        # invalid locs collapse into the xxhash64(NULL) group: drop it after
+        # the aggregation, where the filter cannot reach with_canon
+        .filter(F.col("canon_url").isNotNull())
         .withColumn("priority", freshness_priority(F.col("lastmod")))
     )
 

@@ -54,6 +54,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from nrsr_crawler_spark.functions import urls as U
 from nrsr_crawler_spark.operators import frontier as frontier_ops
 from nrsr_crawler_spark.operators import parse as parse_ops
 from nrsr_crawler_spark.operators import politeness, robots
@@ -194,7 +195,9 @@ class StreamingCrawl:
         # children: same resolution + packed-seq shape as the batch engine
         # (batch_id stands in for the epoch; rk may alias across hosts, which
         # only affects WHICH duplicate's seq wins — a set-level no-op)
-        children = parse_ops.extract_children(fetched, rank_col="rk")
+        children = parse_ops.extract_children(fetched, rank_col="rk").filter(
+            U.is_link_href(F.col("href"))
+        )
         self._write_candidates(
             children.select(
                 F.when(

@@ -21,7 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from nrsr_crawler_spark.functions.hashing import xxh64_str
-from nrsr_crawler_spark.functions.urls import canonicalize_py
+from nrsr_crawler_spark.functions.urls import canonicalize_py, is_link_href_py
 from nrsr_crawler_spark.sources.synthetic_site import BASE, SitePage
 
 
@@ -38,12 +38,15 @@ def _canon(url: str) -> str | None:
     return c
 
 
-def resolve_href(href: str) -> str:
+def resolve_href(href: str, base: str = BASE) -> str | None:
     """Reference href resolution: absolute pass-through, else BASE_URL concat
-    (members.py:76 — the reference never uses urljoin)."""
+    (members.py:76 — the reference never uses urljoin).  None for an href
+    with a scheme other than http(s): not a link."""
+    if not is_link_href_py(href):
+        return None
     if href.startswith("http://") or href.startswith("https://"):
         return href
-    return BASE + href
+    return base + href
 
 
 def robots_allow_py(rules: list[dict], canon_url: str, user_agent: str = "*") -> bool:
@@ -106,7 +109,9 @@ def simulate(
         if page is None:
             continue  # 404: no children
         for href in page.child_hrefs:
-            schedule(resolve_href(href), depth + 1, canon)
+            url = resolve_href(href)
+            if url is not None:
+                schedule(url, depth + 1, canon)
     return GoldenCrawl(order=order, seen=seen)
 
 
@@ -213,7 +218,9 @@ def simulate_epochs(
             if page is None:
                 continue  # 404: logged, no children
             for idx, href in enumerate(page.child_hrefs):
-                url = href if href.startswith(("http://", "https://")) else base_url + href
+                url = resolve_href(href, base_url)
+                if url is None:
+                    continue
                 # epoch_loop._child_seq packing: (epoch, grk, child_idx)
                 seq = (
                     (epoch + 1) * (1 << seq_epoch_shift)

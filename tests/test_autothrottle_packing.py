@@ -57,7 +57,7 @@ def test_autothrottle_budgets_floor_one(spark):
     assert got == {"a": 24, "b": 1, "c": 1}
 
 
-def test_engine_host_budgets_hook(spark, tmp_path):
+def test_engine_host_budgets_hook(spark, shared_crawl, tmp_path):
     """CrawlEngine(host_budgets=...) caps per-host pops exactly like the
     crawl-delay path (the AutoThrottle output feeds this hook)."""
     from nrsr_crawler_spark.plans.epoch_loop import CrawlEngine
@@ -70,8 +70,7 @@ def test_engine_host_budgets_hook(spark, tmp_path):
 
     site = generate_site(periods=1, pages_per_period=2, details_per_page=3, members_per_period=2)
     pages = spark.createDataFrame(site_rows(site), PAGES_SCHEMA)
-    fast = CrawlEngine(spark, pages, str(tmp_path / "fast"), budget_per_host=100, use_bloom=False)
-    s_fast = fast.run([SEED_URL])
+    _, s_fast = shared_crawl(pages, tmp_path / "fast", [SEED_URL], budget_per_host=100, use_bloom=False)
     throttled = CrawlEngine(
         spark, pages, str(tmp_path / "slow"), budget_per_host=100, use_bloom=False,
         host_budgets={"www.nrsr.sk": 2},

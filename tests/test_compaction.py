@@ -34,12 +34,11 @@ def _views(engine):
     }
 
 
-def test_compaction_preserves_views_and_bounds_reads(spark, tmp_path):
+def test_compaction_preserves_views_and_bounds_reads(spark, shared_crawl, tmp_path):
     pages = _pages(spark)
     # small budget → many epochs → many delta dirs to compact
-    engine = CrawlEngine(spark, pages, str(tmp_path / "lake"), budget_per_host=3,
-                         robots_rules=RULES, compact_every=0)
-    engine.run([SEED_URL])
+    engine, _ = shared_crawl(pages, tmp_path / "lake", [SEED_URL], budget_per_host=3,
+                        robots_rules=RULES, compact_every=0)
     assert engine.lake.last_committed() > 2
 
     before = _views(engine)
@@ -82,14 +81,13 @@ def test_tombstones_apply_identically_over_compacted_base(spark, tmp_path):
     assert all(c == 2 for c in counts)
 
 
-def test_periodic_compaction_inside_run(spark, tmp_path):
+def test_periodic_compaction_inside_run(spark, shared_crawl, tmp_path):
     pages = _pages(spark)
     engine = CrawlEngine(spark, pages, str(tmp_path / "lake"), budget_per_host=3,
                          robots_rules=RULES, compact_every=2)
     engine.run([SEED_URL])
     # run() compacted on the way: a base exists and the views are intact
     assert engine.lake.base_upto("fetch_log") >= 2
-    uncompacted = CrawlEngine(spark, pages, str(tmp_path / "lake2"), budget_per_host=3,
-                              robots_rules=RULES, compact_every=0)
-    uncompacted.run([SEED_URL])
+    uncompacted, _ = shared_crawl(pages, tmp_path / "lake2", [SEED_URL], budget_per_host=3,
+                             robots_rules=RULES, compact_every=0)
     assert _views(engine) == _views(uncompacted)

@@ -52,12 +52,13 @@ def _state(engine):
     return log, members, seen
 
 
-def test_compressed_crawl_is_bit_identical(spark, tmp_path):
+def test_compressed_crawl_is_bit_identical(spark, shared_crawl, tmp_path):
     site = generate_site(periods=1, pages_per_period=2, details_per_page=3, members_per_period=2)
     pages = spark.createDataFrame(site_rows(site), PAGES_SCHEMA)
 
-    plain = CrawlEngine(spark, pages, str(tmp_path / "plain"), budget_per_host=100, use_bloom=False)
-    s_plain = plain.run([SEED_URL])
+    plain, s_plain = shared_crawl(
+        pages, tmp_path / "plain", [SEED_URL], budget_per_host=100, use_bloom=False
+    )
     assert s_plain.fetched > 10
 
     enc = (

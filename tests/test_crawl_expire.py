@@ -6,7 +6,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nrsr_crawler_spark.plans.epoch_loop import CrawlEngine
 from nrsr_crawler_spark.sources.synthetic_site import (
     PAGES_SCHEMA,
     SEED_URL,
@@ -18,10 +17,12 @@ from nrsr_crawler_spark.sources.synthetic_site import (
 RULES = robots_rules(permissive=False)
 
 
-def _engine(spark, tmp, **kw):
+def _crawled(spark, shared_crawl, tmp):
+    """(engine, stats) after the seed crawl of the small site — one shared
+    run, a private lake copy per test."""
     site = generate_site(periods=1, pages_per_period=2, details_per_page=3, members_per_period=2)
     pages = spark.createDataFrame(site_rows(site), PAGES_SCHEMA)
-    return CrawlEngine(spark, pages, str(tmp / "lake"), budget_per_host=100, robots_rules=RULES, **kw)
+    return shared_crawl(pages, tmp / "lake", [SEED_URL], budget_per_host=100, robots_rules=RULES)
 
 
 def _fetch_counts(engine):
@@ -29,9 +30,8 @@ def _fetch_counts(engine):
     return {r["url_hash"]: r["n"] for r in log.groupBy("url_hash").agg(F.count(F.lit(1)).alias("n")).collect()}
 
 
-def test_refetch_pops_again_exactly_once(spark, tmp_path):
-    engine = _engine(spark, tmp_path)
-    engine.run([SEED_URL])
+def test_refetch_pops_again_exactly_once(spark, shared_crawl, tmp_path):
+    engine, _ = _crawled(spark, shared_crawl, tmp_path)
     log = engine.lake.read_all(spark, "fetch_log")
     victims = log.orderBy("url_hash").limit(3).select("url_hash")
     victim_keys = {r["url_hash"] for r in victims.collect()}
@@ -48,9 +48,8 @@ def test_refetch_pops_again_exactly_once(spark, tmp_path):
     assert stats3.fetched == 0
 
 
-def test_forget_reenqueues_only_on_rediscovery(spark, tmp_path):
-    engine = _engine(spark, tmp_path)
-    engine.run([SEED_URL])
+def test_forget_reenqueues_only_on_rediscovery(spark, shared_crawl, tmp_path):
+    engine, _ = _crawled(spark, shared_crawl, tmp_path)
     # pick a fetched child and its fetched parent from the edge lineage
     edges = engine.lake.read_all(spark, "edges")
     log = engine.lake.read_all(spark, "fetch_log").select("url_hash").distinct()
@@ -77,17 +76,17 @@ def test_forget_reenqueues_only_on_rediscovery(spark, tmp_path):
     assert counts[parent] == 2
 
 
-def test_expire_accepts_raw_urls(spark, tmp_path):
-    engine = _engine(spark, tmp_path)
-    engine.run([SEED_URL])
-    n = engine.expire(spark.createDataFrame([(SEED_URL,)], "url string"), mode="refetch")
+def test_expire_accepts_raw_urls(spark, shared_crawl, tmp_path):
+    engine, _ = _crawled(spark, shared_crawl, tmp_path)
+    # invalid urls (NULL, garbage) yield no tombstone
+    urls = spark.createDataFrame([(SEED_URL,), (None,), ("not a url",)], "url string")
+    n = engine.expire(urls, mode="refetch")
     assert n == 1
     assert engine.run().fetched == 1
 
 
-def test_expire_older_than_full_refresh(spark, tmp_path):
-    engine = _engine(spark, tmp_path)
-    stats1 = engine.run([SEED_URL])
+def test_expire_older_than_full_refresh(spark, shared_crawl, tmp_path):
+    engine, stats1 = _crawled(spark, shared_crawl, tmp_path)
     n = engine.expire_older_than(0)  # everything is "old enough"
     assert n == stats1.fetched
     stats2 = engine.run()

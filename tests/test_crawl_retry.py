@@ -47,13 +47,12 @@ def _final_state(engine):
     return log, seen, members
 
 
-def test_transient_failures_recover_to_identical_state(spark, tmp_path):
+def test_transient_failures_recover_to_identical_state(spark, shared_crawl, tmp_path):
     site = _site()
-    clean = CrawlEngine(
-        spark, _pages_df(spark, site), str(tmp_path / "clean"),
+    clean, s0 = shared_crawl(
+        _pages_df(spark, site), tmp_path / "clean", [SEED_URL],
         budget_per_host=100, use_bloom=False,
     )
-    s0 = clean.run([SEED_URL])
     assert s0.retried == 0 and s0.failed == 0
 
     flaky_pages = inject_failures(
@@ -70,16 +69,14 @@ def test_transient_failures_recover_to_identical_state(spark, tmp_path):
     log0, seen0, members0 = _final_state(clean)
     log1, seen1, members1 = _final_state(flaky)
     # transient failures fully recover: same pages fetched, same seen set,
-    # same typed stores — and every logged fetch of a REAL page ended 'ok'
-    # (the site's javascript: pseudo-hrefs have no page behind them and log
-    # status='missing' in both runs — see test_missing_page_logged_not_retried)
+    # same typed stores — and every logged fetch ended 'ok' (the site's
+    # javascript: pseudo-hrefs are not links and are never fetched)
     assert seen1 == seen0
     assert set(log1) == set(log0)
     assert members1 == members0
-    assert all(
-        st == "ok" or ("javascript:" in u and st == "missing")
-        for u, (st, _a) in log1.items()
-    ), sorted(u for u, (st, _a) in log1.items() if st != "ok")
+    assert all(st == "ok" for st, _a in log1.values()), sorted(
+        u for u, (st, _a) in log1.items() if st != "ok"
+    )
     assert {u: v for u, v in log1.items() if v[0] != "ok"} == {
         u: v for u, v in log0.items() if v[0] != "ok"
     }
@@ -139,25 +136,22 @@ def test_permanent_failure_gives_up_and_prunes_subtree(spark, tmp_path):
         ), f"child {href} of the failed page was fetched"
 
 
-def test_no_failures_is_zero_overhead_schema_parity(spark, tmp_path):
+def test_no_failures_is_zero_overhead_schema_parity(spark, shared_crawl, tmp_path):
     # pages WITHOUT fail_times: retries disabled, but the fetch_log still
     # carries the (status, attempt) columns with ('ok', 0)
     site = _site()
-    engine = CrawlEngine(
-        spark, _pages_df(spark, site), str(tmp_path / "plain"),
+    engine, _ = shared_crawl(
+        _pages_df(spark, site), tmp_path / "plain", [SEED_URL],
         budget_per_host=100, use_bloom=False,
     )
-    engine.run([SEED_URL])
     assert not engine._retries_enabled
     log = engine.lake.read_merged(engine.spark, "fetch_log")
     assert {"status", "attempt"} <= set(log.columns)
     rows = log.select("canon_url", "status", "attempt").collect()
-    # real pages: ('ok', 0); javascript: pseudo-hrefs: ('missing', 0)
+    # every fetch is a real page: the site's javascript: pseudo-hrefs are
+    # not links and are never resolved into a fetch
     for r in rows:
-        if "javascript:" in r.canon_url:
-            assert (r.status, r.attempt) == ("missing", 0)
-        else:
-            assert (r.status, r.attempt) == ("ok", 0), r.canon_url
+        assert (r.status, r.attempt) == ("ok", 0), r.canon_url
 
 
 def test_missing_page_logged_not_retried(spark, tmp_path):
@@ -185,11 +179,7 @@ def test_missing_page_logged_not_retried(spark, tmp_path):
     }
     vic_canon = canonicalize_py(victim)
     assert log[vic_canon] == ("missing", 0)
-    # the only other dangling links in the synthetic site are its
-    # javascript pseudo-hrefs (crawl noise the reference renders via
-    # Splash) — every real page stays 'ok'
+    # every other fetch is a real page and stays 'ok'
     assert all(
-        st == "ok" or "javascript:" in u
-        for u, (st, _a) in log.items()
-        if u != vic_canon
+        st == "ok" for u, (st, _a) in log.items() if u != vic_canon
     ), sorted(u for u, (st, _a) in log.items() if st != "ok")

@@ -101,13 +101,12 @@ def test_changed_content_reparses(spark, tmp_path):
     assert len(row) == 1 and row[0]["status"] == "ok"
 
 
-def test_cache_off_reparses_by_default(spark, tmp_path):
+def test_cache_off_reparses_by_default(spark, shared_crawl, tmp_path):
     rows = _rows()
     pages = spark.createDataFrame(rows, PAGES_SCHEMA)
-    engine = CrawlEngine(
-        spark, pages, str(tmp_path / "lake"), budget_per_host=100, robots_rules=RULES
+    engine, _ = shared_crawl(
+        pages, tmp_path / "lake", [SEED_URL], budget_per_host=100, robots_rules=RULES
     )
-    engine.run([SEED_URL])
     log = engine.lake.read_all(spark, "fetch_log")
     victims = log.filter(F.col("status") == "ok").orderBy("url_hash").limit(2).select("url_hash")
     engine.expire(victims, mode="refetch")

@@ -1,24 +1,27 @@
 """Schema parity with the reference's item declarations (SURVEY §1.1-1.4).
 
-Reflects over /root/reference/nrsr/items.py (read-only) to extract each
-scrapy.Item class's declared fields and output processors, then asserts the
-engine's ITEM_SPECS match field-for-field — names, order, and fold
-semantics.  Also unit-tests the Spark re-expression of the item-loader
-folds.
+The reference's ``scrapy.Item`` classes, their declared fields and output
+processors are checked in as data (``tests/reference_items.py``); the tests
+assert the engine's ITEM_SPECS match them field for field — names, order,
+and fold semantics.  Where the reference source is checked out at ``REF``,
+its live parse must also equal that table.  Also unit-tests the Spark
+re-expression of the item-loader folds.
 """
 
 from __future__ import annotations
 
+import os
 import re
 
 from pyspark.sql import functions as F
 
 from nrsr_crawler_spark import items as I
+from tests.reference_items import REFERENCE_CHILD_FIELDS, REFERENCE_ITEMS
 
 REF = "/root/reference/nrsr/items.py"
 
 
-def _reference_classes() -> dict[str, list[tuple[str, str]]]:
+def _parse_reference_source() -> dict[str, list[tuple[str, str]]]:
     """class name → [(field, fold)] parsed from the reference source."""
     src = open(REF, encoding="utf-8").read()
     classes: dict[str, list[tuple[str, str]]] = {}
@@ -66,6 +69,23 @@ def _reference_classes() -> dict[str, list[tuple[str, str]]]:
             classes[current].append((fm.group(1), fold))
             buf = buf[:fm.start()] + buf[end + 1 :]
     return {k: v for k, v in classes.items() if v}
+
+
+def _reference_classes() -> dict[str, list[tuple[str, str]]]:
+    """class name → [(field, fold)] from the checked-in table (child items
+    carry field names only); where the reference source exists, its live
+    parse must equal the table."""
+    if os.path.exists(REF):
+        live = _parse_reference_source()
+        assert set(live) == set(REFERENCE_ITEMS) | set(REFERENCE_CHILD_FIELDS)
+        assert {c: live[c] for c in REFERENCE_ITEMS} == REFERENCE_ITEMS
+        assert {
+            c: [f for f, _ in live[c]] for c in REFERENCE_CHILD_FIELDS
+        } == REFERENCE_CHILD_FIELDS
+    return {
+        **REFERENCE_ITEMS,
+        **{c: [(f, None) for f in fs] for c, fs in REFERENCE_CHILD_FIELDS.items()},
+    }
 
 
 def test_every_reference_item_class_is_mapped():

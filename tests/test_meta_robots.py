@@ -87,14 +87,15 @@ def test_noindex_drops_items_keeps_children(spark, tmp_path):
     assert len(m0) - len(m1) == 1  # exactly the noindexed member is absent
 
 
-def test_default_off_matches_reference_semantics(spark, tmp_path):
+def test_default_off_matches_reference_semantics(spark, shared_crawl, tmp_path):
     site = _site()
     list_url = next(u for u, p in site.items() if p.kind == "list")
     pages = _inject_meta(_pages(spark, site), list_url, "noindex, nofollow")
     # meta_robots left False → directives ignored, crawl identical to clean
     tagged = CrawlEngine(spark, pages, str(tmp_path / "off"), budget_per_host=100, use_bloom=False)
-    clean = CrawlEngine(spark, _pages(spark, site), str(tmp_path / "cl"), budget_per_host=100, use_bloom=False)
     s1 = tagged.run([SEED_URL])
-    s0 = clean.run([SEED_URL])
+    clean, s0 = shared_crawl(
+        _pages(spark, site), tmp_path / "cl", [SEED_URL], budget_per_host=100, use_bloom=False
+    )
     assert s1.fetched == s0.fetched
     assert set(_log(tagged)) == set(_log(clean))

@@ -181,6 +181,113 @@ def test_slim_schedule_matches_full_and_ships_no_url_strings(spark):
         assert "canon_url" not in header and "url#" not in header, header
 
 
+def test_rejoin_urls_tells_shared_seq_apart_and_drops_invalid_urls(spark):
+    """rejoin_urls over the hard cases: two URLs sharing one seq (only one
+    popped), an exact-duplicate winner row, NULL and garbage URLs on a
+    popped seq, and a popped key whose seq occurs in raw only under
+    another URL.  The slim pass must equal the full-payload one."""
+    from nrsr_crawler_spark.functions.hashing import xxh64_str
+
+    raw = spark.createDataFrame(
+        [
+            ("https://www.nrsr.sk/c13", 13, 0),
+            ("https://www.nrsr.sk/c12", 12, 0),
+            ("https://www.nrsr.sk/c11", 11, 0),
+            ("https://www.nrsr.sk/a", 10, 0),
+            ("https://www.nrsr.sk/a", 10, 0),
+            ("HTTPS://www.nrsr.sk/b#frag", 10, 0),
+            ("not a url at all", 10, 0),
+            ("", 10, 0),
+            (None, 10, 0),
+            ("https://www.nrsr.sk/c9", 9, 0),
+        ],
+        "url string, seq long, priority int",
+    )
+    # budget 4: seq 13, 12, 11, then ONE of a/b (seq 10, url_hash breaks the tie)
+    full = frontier.prepare_candidates(raw)
+    full_pop = politeness.pop_budget(full, budget=4, tiebreak=[F.col("url_hash")])
+    keys = politeness.pop_budget(
+        frontier.prepare_candidates_slim(raw), budget=4, tiebreak=[F.col("url_hash")]
+    ).select("url_hash", "seq", "rk")
+    slim_pop = frontier.rejoin_urls(keys, raw)
+    a = sorted(map(repr, full_pop.select("url_hash", "canon_url", "seq", "rk").collect()))
+    b = sorted(map(repr, slim_pop.select("url_hash", "canon_url", "seq", "rk").collect()))
+    assert a == b and len(a) == 4
+    at10 = [r.canon_url for r in slim_pop.collect() if r.seq == 10]
+    assert len(at10) == 1 and at10[0] in ("https://www.nrsr.sk/a", "https://www.nrsr.sk/b")
+
+    # both shared-seq URLs popped, plus a key whose seq 9 belongs to c9 only
+    h = {u: xxh64_str(f"https://www.nrsr.sk/{u}") for u in ("a", "b", "q")}
+    hand = spark.createDataFrame(
+        [(h["a"], 10, 1), (h["b"], 10, 2), (h["q"], 9, 3)], "url_hash long, seq long, rk int"
+    )
+    got = sorted(
+        (r.rk, r.canon_url, r.url_hash, r.seq)
+        for r in frontier.rejoin_urls(hand, raw).collect()
+    )
+    assert got == [
+        (1, "https://www.nrsr.sk/a", h["a"], 10),
+        (2, "https://www.nrsr.sk/b", h["b"], 10),
+    ]
+
+
+def _canon_inputs(spark):
+    raw = spark.range(0, 100).select(
+        F.concat(F.lit("https://www.nrsr.sk/p?id="), F.col("id") % 10).alias("url"),
+        F.col("id").alias("seq"),
+        F.lit(0).alias("priority"),
+    )
+    keys = spark.range(0, 3).select(
+        F.xxhash64(F.col("id").cast("string")).alias("url_hash"),
+        F.col("id").alias("seq"),
+        F.lit(1).alias("rk"),
+    )
+    return raw, keys
+
+
+def test_with_canon_consumers_keep_canon_out_of_predicates(spark):
+    """Every with_canon consumer evaluates the canon once per call: no
+    comparison with canon_url or url_hash above it is pushed into the alias
+    chain (the stream's validity filter aside, see below)."""
+    from nrsr_crawler_spark.plans.epoch_loop import _tombstone_keys
+    from nrsr_crawler_spark.sources.sitemap import sitemap_candidates
+    from nrsr_crawler_spark.streaming.frontier_stream import prepare_stream
+
+    from tests.plan_guard import assert_canon_plan
+
+    raw, keys = _canon_inputs(spark)
+    pages = spark.range(0, 2).select(
+        F.concat(
+            F.lit("<urlset><url><loc>https://www.nrsr.sk/s?id="),
+            F.col("id"),
+            F.lit("</loc></url><url><loc>garbage</loc></url></urlset>"),
+        ).alias("body")
+    )
+    assert_canon_plan(frontier.rejoin_urls(keys, raw))
+    assert_canon_plan(frontier.prepare_candidates(raw))
+    assert_canon_plan(frontier.prepare_candidates_slim(raw))
+    assert_canon_plan(sitemap_candidates(pages))
+    assert_canon_plan(_tombstone_keys(raw.select("url")))
+    # a stream must drop invalid rows before its stateful dedup, so its
+    # validity filter is pushed down: a linear predicate that reads the url
+    # four more times, never the whole canon
+    assert_canon_plan(prepare_stream(raw), entries=5)
+
+
+def test_plan_guard_catches_hash_compared_above_canon(spark):
+    """The guard rejects the shape that recanonicalizes every row: a join
+    on seq, then the recomputed hash compared with the joined one."""
+    from tests.plan_guard import assert_canon_plan
+
+    raw, keys = _canon_inputs(spark)
+    joined = raw.join(F.broadcast(keys.withColumnRenamed("url_hash", "want")), "seq")
+    bad = U.with_canon(joined, hash_col="url_hash").filter(
+        F.col("url_hash") == F.col("want")
+    )
+    with pytest.raises(AssertionError, match="hash in join condition"):
+        assert_canon_plan(bad)
+
+
 def test_trap_demotion_stays_broadcast_and_adds_no_exchange(spark):
     """The engine's pop-time trap demotion must join the flagged template
     set via BroadcastHashJoin and add ZERO shuffle exchanges beyond the two

@@ -62,15 +62,14 @@ def test_boosts_reorder_pops_not_fetch_set(spark, tmp_path):
     assert log.select("url_hash").exceptAll(plain_log).count() == 0
 
 
-def test_pagerank_boosts_from_crawl_edges(spark, tmp_path):
+def test_pagerank_boosts_from_crawl_edges(spark, shared_crawl, tmp_path):
     from nrsr_crawler_spark.sources.synthetic_site import SEED_URL, generate_site, site_rows
 
     site = generate_site(periods=2, pages_per_period=2, details_per_page=3, members_per_period=3)
     pages = spark.createDataFrame(site_rows(site), PAGES_SCHEMA)
-    eng = CrawlEngine(
-        spark, pages, str(tmp_path / "lake"), budget_per_host=100, typed_items=False
+    eng, _ = shared_crawl(
+        pages, tmp_path / "lake", [SEED_URL], budget_per_host=100, typed_items=False
     )
-    eng.run([SEED_URL])
     boosts = eng.pagerank_boosts(scale=100)
     rows = boosts.collect()
     assert rows and all(r.boost >= 0 for r in rows)
@@ -84,17 +83,16 @@ def test_pagerank_boosts_from_crawl_edges(spark, tmp_path):
     assert again == {(r.url_hash, r.boost) for r in rows}
 
 
-def test_yield_boosts_prefer_item_bearing_templates(spark, tmp_path):
+def test_yield_boosts_prefer_item_bearing_templates(spark, shared_crawl, tmp_path):
     """Focused-crawl value ordering: templates whose fetched pages produced
     items boost above templates that produced none."""
     from nrsr_crawler_spark.sources.synthetic_site import SEED_URL, generate_site, site_rows
 
     site = generate_site(periods=2, pages_per_period=2, details_per_page=3, members_per_period=3)
     pages = spark.createDataFrame(site_rows(site), PAGES_SCHEMA)
-    eng = CrawlEngine(
-        spark, pages, str(tmp_path / "lake"), budget_per_host=100, typed_items=False
+    eng, _ = shared_crawl(
+        pages, tmp_path / "lake", [SEED_URL], budget_per_host=100, typed_items=False
     )
-    eng.run([SEED_URL])
 
     boosts = eng.yield_boosts(scale=100)
     rows = boosts.collect()

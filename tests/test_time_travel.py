@@ -17,12 +17,19 @@ from nrsr_crawler_spark.sources.synthetic_site import (
 )
 
 
-def _engines(spark, tmp_path, **kw):
+def _pages(spark):
     site = generate_site(periods=1, pages_per_period=2, details_per_page=3, members_per_period=2)
-    pages = spark.createDataFrame(site_rows(site), PAGES_SCHEMA)
-    full = CrawlEngine(spark, pages, str(tmp_path / "full"), budget_per_host=100, use_bloom=False, **kw)
-    part = CrawlEngine(spark, pages, str(tmp_path / "part"), budget_per_host=100, use_bloom=False, **kw)
-    return full, part
+    return spark.createDataFrame(site_rows(site), PAGES_SCHEMA)
+
+
+def _crawled(spark, shared_crawl, tmp_path, name, max_epochs=100000, **kw):
+    """Engine over a private copy of the seed crawl's lake, stopped after
+    ``max_epochs`` epochs (runs shared across tests)."""
+    engine, _ = shared_crawl(
+        _pages(spark), tmp_path / name, [SEED_URL], max_epochs=max_epochs,
+        budget_per_host=100, use_bloom=False, **kw,
+    )
+    return engine
 
 
 def _members(engine, as_of=None):
@@ -38,10 +45,9 @@ def _seen(engine, as_of=None):
     return {r.canon_url for r in engine.seen_set(as_of=as_of).collect()}
 
 
-def test_snapshot_equals_stopped_crawl(spark, tmp_path):
-    full, part = _engines(spark, tmp_path)
-    full.run([SEED_URL])
-    part.run([SEED_URL], max_epochs=2)
+def test_snapshot_equals_stopped_crawl(spark, shared_crawl, tmp_path):
+    full = _crawled(spark, shared_crawl, tmp_path, "full")
+    part = _crawled(spark, shared_crawl, tmp_path, "part", max_epochs=2)
     cut = part.lake.last_committed()
     assert cut < full.lake.last_committed()
 
@@ -51,10 +57,9 @@ def test_snapshot_equals_stopped_crawl(spark, tmp_path):
     assert _seen(full, as_of=cut) < _seen(full)
 
 
-def test_snapshot_survives_newer_compaction_base(spark, tmp_path):
-    full, part = _engines(spark, tmp_path, compact_every=1)
-    full.run([SEED_URL])
-    part.run([SEED_URL], max_epochs=2)
+def test_snapshot_survives_newer_compaction_base(spark, shared_crawl, tmp_path):
+    full = _crawled(spark, shared_crawl, tmp_path, "full", compact_every=1)
+    part = _crawled(spark, shared_crawl, tmp_path, "part", max_epochs=2, compact_every=1)
     cut = part.lake.last_committed()
     # a base newer than the snapshot exists — the fallback path is exercised
     assert full.lake.base_upto("frontier") > cut
@@ -63,17 +68,15 @@ def test_snapshot_survives_newer_compaction_base(spark, tmp_path):
     assert _seen(full, as_of=cut) == _seen(part)
 
 
-def test_typed_store_changes_cdc(spark, tmp_path):
+def test_typed_store_changes_cdc(spark, shared_crawl, tmp_path):
     """Changelog read: insert-from-void, empty changelog on a no-op
     recrawl (byte-identical re-extract), single 'update' row when the
     source page actually changed."""
     from pyspark.sql import functions as F
 
-    site = generate_site(periods=1, pages_per_period=2, details_per_page=3, members_per_period=2)
-    pages = spark.createDataFrame(site_rows(site), PAGES_SCHEMA)
+    pages = _pages(spark)
     root = str(tmp_path / "cdc")
-    eng = CrawlEngine(spark, pages, root, budget_per_host=100, use_bloom=False)
-    eng.run([SEED_URL])
+    eng = _crawled(spark, shared_crawl, tmp_path, "cdc")
     since = eng.lake.last_committed()
 
     store = eng.typed_store("member")
@@ -119,15 +122,14 @@ def test_typed_store_changes_cdc(spark, tmp_path):
     )
 
 
-def test_snapshot_immune_to_mid_read_compaction_churn(spark, tmp_path):
+def test_snapshot_immune_to_mid_read_compaction_churn(spark, shared_crawl, tmp_path):
     """Round-4 verdict item 8: a LAZILY-PLANNED snapshot read (seen set,
     frontier, typed store) must stay byte-identical when compaction churn
     supersedes the requested epoch between planning and collection —
     compact_every=1 writes a newer base (and GCs older ones) every epoch."""
-    full, part = _engines(spark, tmp_path, compact_every=1)
-    part.run([SEED_URL], max_epochs=2)
+    part = _crawled(spark, shared_crawl, tmp_path, "part", max_epochs=2, compact_every=1)
     cut = part.lake.last_committed()
-    full.run([SEED_URL], max_epochs=2)
+    full = _crawled(spark, shared_crawl, tmp_path, "full", max_epochs=2, compact_every=1)
     assert full.lake.last_committed() == cut
 
     # plan the snapshot reads NOW (lazy DataFrames, nothing collected) …

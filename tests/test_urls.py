@@ -85,6 +85,28 @@ def test_canonicalize_semantics():
     assert U.canonicalize_py("https://www.nrsr.sk") == "https://www.nrsr.sk/"
 
 
+HREFS = {
+    "javascript:__doPostBack('grid','Page$2')": False,
+    "JavaScript:void(0)": False,
+    "mailto:member1@nrsr.sk": False,
+    "tel:+421": False,
+    "ftp://www.nrsr.sk/x": False,
+    "https://www.nrsr.sk/x": True,
+    "HTTP://WWW.NRSR.SK/": True,
+    "/web/Default.aspx?sid=x": True,
+    "Default.aspx?sid=zakony&x=a:b": True,
+    "p/a:b": True,
+    "": True,
+}
+
+
+def test_is_link_href_keeps_relative_and_http_only(spark):
+    df = spark.createDataFrame([(h,) for h in HREFS], "href string")
+    got = {r.href: r.ok for r in df.select("href", U.is_link_href(F.col("href")).alias("ok")).collect()}
+    assert got == HREFS
+    assert {h: U.is_link_href_py(h) for h in HREFS} == HREFS
+
+
 @settings(max_examples=200, deadline=None)
 @given(
     host=st.from_regex(r"[a-z][a-z0-9]{0,10}(\.[a-z]{2,5}){1,2}", fullmatch=True),
